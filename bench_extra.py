@@ -75,10 +75,9 @@ def stream_profile(n_docs: int = 12000, n_drops: int = 3) -> None:
         )
         return out
 
+    # streaming/ingest.py imports run_pipeline_incremental inside the call,
+    # so patching the pipeline module is enough
     P.run_pipeline_incremental = patched
-    import research_knowledge_graph_spark.streaming.ingest as ing
-
-    ing.run_pipeline_incremental = patched
 
     try:
         inp, graph, ckpt = (os.path.join(sdir, d) for d in ("in", "graph", "ck"))
@@ -110,7 +109,6 @@ def stream_profile(n_docs: int = 12000, n_drops: int = 3) -> None:
         }, indent=1))
     finally:
         P.run_pipeline_incremental = orig
-        ing.run_pipeline_incremental = orig
         shutil.rmtree(sdir, ignore_errors=True)
 
 

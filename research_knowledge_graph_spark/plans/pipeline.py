@@ -4,11 +4,15 @@ Stages (each a committed snapshot = checkpoint boundary; re-runs skip
 committed stages — the idempotency contract):
 
 1. ``docs``          pages → extracted text (byte-identical invariant)
-2. ``mentions`` / ``raw_triples``   triple extraction (fixture | heuristic)
+2. ``metadata``      + mention/triple extraction (fixture | heuristic)
 3. ``mentions_valid`` / ``triples_valid``  validation + normalization
 4+5. ``nodes`` / ``edges``   exact-label canonicalization + materialization
 6. ``cross_edges``   shared-entity blocking + pair scoring
 7. ``edges_all``     final edge table (intra ∪ cross)
+
+Stages 1-5 are one core (``_build_batch``) shared by the one-shot
+``run_pipeline`` and the per-batch ``run_pipeline_incremental``; the two
+differ only in their checkpoint policy and in how stages 6-7 commit.
 
 Reference flow: ``src/main.py:124-141`` →
 ``ingestion_service.ingest_paper`` (per-paper sequential) →
@@ -19,6 +23,7 @@ is one partition-parallel DataFrame job; the per-paper loop disappears.
 from __future__ import annotations
 
 import time
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
@@ -31,6 +36,11 @@ from research_knowledge_graph_spark.operators import html_text as H
 from research_knowledge_graph_spark.operators import linking as L
 from research_knowledge_graph_spark.operators import validation as V
 from research_knowledge_graph_spark.sources.table_io import TableIO
+
+# an incremental batch compacts every delta-appended table holding more than
+# this many snapshots before it starts — N batches otherwise mean N-way
+# union reads forever
+COMPACT_ABOVE = 8
 
 
 @dataclass
@@ -56,6 +66,147 @@ def _make_timed(timings: dict | None):
     return _timed
 
 
+def _persist(df: DataFrame, cached: list[DataFrame]) -> DataFrame:
+    """Executor-local cache (MEMORY_AND_DISK), populated on FIRST TOUCH by
+    whichever downstream job scans it first — concurrent consumers racing
+    on the same partitions are deduped by the block manager's per-block
+    locks, so the race costs nothing and the stage's compute overlaps its
+    consumers' other work. An eager ``.count()`` materialization pass would
+    serialize the stage's full compute BEFORE any consumer starts —
+    measured +70% pipeline wall time on stage 6 in round 4 and +9% total
+    when stages 1-3 were eager-counted (round-5 A/B, 20k docs: 13.7s eager
+    → 12.5s first-touch). ``cached`` collects the frame so the caller can
+    unpersist it in a ``finally``: a failed run must not leave full-table
+    persists pinned in a long-lived session (streaming/incremental
+    services reuse one)."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    cached.append(df)
+    return df
+
+
+def _commit_concurrently(
+    jobs: dict[str, Callable[[], object]],
+    after: dict[str, tuple[str, ...]] | None = None,
+) -> dict[str, object]:
+    """Run the named commit jobs from concurrent driver threads, so their
+    Spark jobs overlap (the scheduler interleaves their tasks), and return
+    their results by name.
+
+    A job listed in ``after`` starts only once every job it names (each
+    earlier in ``jobs``) has finished, and is skipped if one of them
+    failed — that failure is reported already. Every failure is gathered:
+    a commit error must not mask the likelier compute error of a
+    concurrent cross-link job, so the first is raised with an ``also
+    failed: stage <name>`` note for each of the rest."""
+    after = after or {}
+    futs = {}
+
+    def run(name):
+        if any(futs[dep].exception() is not None for dep in after.get(name, ())):
+            return None
+        return jobs[name]()
+
+    with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
+        for name in jobs:
+            futs[name] = ex.submit(run, name)
+    errs = [(n, e) for n, f in futs.items() if (e := f.exception()) is not None]
+    if errs:
+        first = errs[0][1]
+        for name, exc in errs[1:]:
+            first.add_note(f"also failed: stage {name}: {exc!r}")
+        raise first
+    return {name: f.result() for name, f in futs.items()}
+
+
+def _build_batch(
+    io: TableIO,
+    fp: str,
+    pages: DataFrame,
+    mode: str,
+    timed,
+    cached: list[DataFrame],
+    full: bool = False,
+    canonicalize: str = "exact",
+) -> tuple[DataFrame, DataFrame]:
+    """Stages 1-5 over ``pages``; returns the lazy (nodes, edges) frames.
+
+    ``full``: every boundary is a committed snapshot (``io.write_stage``
+    under ``fp``) and the two validation streams commit from overlapped
+    driver threads. Otherwise each boundary is a first-touch cache
+    (:func:`_persist`) and validation FUSES with extraction into the
+    consuming jobs: ``mentions_valid`` is cached (nodes + edges both scan
+    it), ``triples_valid`` has one consumer (``build_edges``) and stays
+    fully lazy.
+
+    The raw extraction streams (mentions / raw triples) are never
+    checkpointed: extraction is a map-only recompute from ``docs``, so
+    writing + re-reading 10¹² raw mention rows costs more than
+    re-deriving them; checkpoints sit at the expensive boundaries (html
+    decode, post-shuffle validation, graph materialization)."""
+
+    def stage(df: DataFrame, name: str) -> DataFrame:
+        return io.write_stage(df, name, fp) if full else _persist(df, cached)
+
+    # stage 1: text extraction (map-only, Arrow UDF); three downstream
+    # consumers scan it
+    docs = timed(
+        "docs",
+        stage,
+        H.extract_text(pages).select(
+            "url", "warc_ts", F.col("extracted_text").alias("text"), "lang"
+        ),
+        "docs",
+    )
+
+    # stage 2: extraction. metadata has TWO consumers (nodes, edges) and is
+    # checkpointed; the single-consumer streams stay lazy
+    meta = timed("metadata", stage, X.extract_metadata(docs), "metadata")
+    if mode == "fixture":
+        mentions = X.extract_mentions_fixture(docs)
+        triples = X.extract_triples_fixture(docs.join(meta.select("url", "title"), "url"))
+    else:
+        mentions = X.extract_mentions_heuristic(docs)
+        triples = X.extract_triples_heuristic(docs)
+
+    # stage 3: validation/normalization
+    if full:
+        valid = _commit_concurrently({
+            "mentions_valid": lambda: timed(
+                "mentions_valid", io.write_stage,
+                V.validate_mentions(mentions), "mentions_valid", fp,
+            ),
+            "triples_valid": lambda: timed(
+                "triples_valid", io.write_stage,
+                V.validate_triples(triples), "triples_valid", fp,
+            ),
+        })
+        mentions_v, triples_v = valid["mentions_valid"], valid["triples_valid"]
+    else:
+        mentions_v = timed(
+            "mentions_valid", stage, V.validate_mentions(mentions), "mentions_valid"
+        )
+        triples_v = V.validate_triples(triples)
+
+    # stage 3b (optional): fuzzy alias clustering — mentions keep their
+    # surface label (it is the triple-endpoint resolution key);
+    # canonical_label drives node identity downstream
+    if canonicalize == "fuzzy":
+        from research_knowledge_graph_spark.operators.canonicalize import (
+            canonicalize_fuzzy,
+        )
+
+        fuzzy = canonicalize_fuzzy(mentions_v).select(
+            "url", "seq", "entity_type", "label", "description", "properties",
+            "canonical_label",
+        )
+        mentions_v = stage(fuzzy, "mentions_canonical")
+
+    # stages 4+5: canonicalize + materialize
+    nodes = L.build_paper_nodes(meta).unionByName(L.build_entity_nodes(mentions_v))
+    edges = L.build_edges(meta, mentions_v, triples_v, resolve_titles=(mode != "fixture"))
+    return nodes, edges
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -65,7 +216,6 @@ def run_pipeline(
     cross_link: bool = True,
     max_block_degree: int | None = 1000,
     canonicalize: str = "exact",
-    materialize_raw: bool = False,
     checkpoint_level: str = "full",
     timings: dict | None = None,
     dedup_urls: bool = False,
@@ -88,13 +238,6 @@ def run_pipeline(
     (scale path: MinHash-LSH → connected components → broadcast alias
     dictionary rewrites each mention's label to its cluster canonical before
     materialization).
-
-    ``materialize_raw``: checkpoint the raw extraction streams (mentions /
-    raw_triples / metadata) as their own snapshots. Default off — the right
-    scale tradeoff: extraction is a map-only recompute from the committed
-    ``docs`` table, so writing + re-reading 10¹² raw mention rows costs more
-    than re-deriving them; checkpoints sit at the expensive boundaries
-    (html decode, post-shuffle validation, graph materialization).
 
     ``checkpoint_level``:
 
@@ -132,208 +275,68 @@ def run_pipeline(
         # one hash-agg shuffle on canonical_url (map-side combined);
         # downstream stages see the exact pages schema they always did
         pages = url_dedup(pages).select(*pages.columns)
-    _cached: list[DataFrame] = []
-    _timed = _make_timed(timings)
-
-    def _stage(df: DataFrame, name: str, eager: bool = False) -> DataFrame:
-        """Checkpoint boundary: snapshot commit (full) or executor-local
-        cache (minimal). In minimal mode the cache is populated on FIRST
-        TOUCH by whichever downstream job scans it first — concurrent
-        consumers racing on the same partitions are deduped by the block
-        manager's per-block locks, so the race costs nothing and the
-        stage's compute overlaps its consumers' other work. An eager
-        ``.count()`` materialization pass would serialize the stage's full
-        compute BEFORE any consumer starts — measured +70% pipeline wall
-        time on stage 6 in round 4 and +9% total when stages 1-3 were
-        eager-counted (round-5 A/B, 20k docs: 13.7s eager → 12.5s
-        first-touch; the stage-6 job timings absorb the fused upstream
-        compute, total wall drops).
-        ``eager`` is kept for callers that need a materialization barrier
-        (none in the hot path today)."""
-        if not minimal:
-            return io.write_stage(df, name, fp)
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        _cached.append(df)
-        if eager:
-            df.count()
-        return df
-
-    # stage 1: text extraction (map-only, Arrow UDF); three downstream
-    # consumers scan it → lazily-persisted, first-touch populated
-    docs = _timed(
-        "docs",
-        _stage,
-        H.extract_text(pages).select(
-            "url", "warc_ts", F.col("extracted_text").alias("text"), "lang"
-        ),
-        "docs",
-    )
-
-    # stage 2: extraction — three independent outputs of one docs scan;
-    # submitted from concurrent driver threads so their job latencies overlap
-    # (the Spark scheduler interleaves the tasks; this trims the serial
-    # stage-boundary floor that otherwise caps scaling efficiency)
-    meta_df = X.extract_metadata(docs)
-    if mode == "fixture":
-        mentions_df = X.extract_mentions_fixture(docs)
-        triples_df = X.extract_triples_fixture(
-            docs.join(meta_df.select("url", "title"), "url")
-        )
-    else:
-        mentions_df = X.extract_mentions_heuristic(docs)
-        triples_df = X.extract_triples_heuristic(docs)
-
-    if materialize_raw:
-        with ThreadPoolExecutor(max_workers=3) as ex:
-            f_mentions = ex.submit(_timed, "mentions", io.write_stage, mentions_df, "mentions", fp)
-            f_triples = ex.submit(_timed, "raw_triples", io.write_stage, triples_df, "raw_triples", fp)
-            f_meta = ex.submit(_timed, "metadata", io.write_stage, meta_df, "metadata", fp)
-            mentions, triples, meta = f_mentions.result(), f_triples.result(), f_meta.result()
-    else:
-        # single-consumer streams stay lazy (validation fuses with
-        # extraction in one job); metadata has TWO consumers (nodes, edges)
-        # so it is persisted — first consumer populates, second reads back
-        mentions, triples = mentions_df, triples_df
-        meta = _timed("metadata", _stage, meta_df, "metadata")
-
-    # stage 3: validation/normalization. In full mode the two independent
-    # streams are committed from overlapped driver threads; in minimal mode
-    # validation FUSES with extraction into the consuming jobs —
-    # mentions_valid is cached eagerly (nodes + edges both scan it),
-    # triples_valid has one consumer (build_edges) and stays fully lazy.
-    if minimal:
-        mentions_v = _timed(
-            "mentions_valid", _stage, V.validate_mentions(mentions), "mentions_valid"
-        )
-        triples_v = V.validate_triples(triples)
-    else:
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            f_mv = ex.submit(_timed, "mentions_valid", io.write_stage,
-                             V.validate_mentions(mentions), "mentions_valid", fp)
-            f_tv = ex.submit(_timed, "triples_valid", io.write_stage,
-                             V.validate_triples(triples), "triples_valid", fp)
-            mentions_v, triples_v = f_mv.result(), f_tv.result()
-
-    # stage 3b (optional): fuzzy alias clustering — mentions keep their
-    # surface label for provenance; the canonical label drives node identity
-    if canonicalize == "fuzzy":
-        from research_knowledge_graph_spark.operators.canonicalize import (
-            canonicalize_fuzzy,
-        )
-
-        # surface label kept (it is the triple-endpoint resolution key);
-        # canonical_label drives node identity downstream
-        fuzzy = canonicalize_fuzzy(mentions_v).select(
-            "url", "seq", "entity_type", "label", "description", "properties",
-            "canonical_label",
-        )
-        mentions_v = _stage(fuzzy, "mentions_canonical")
-
-    # stages 4+5(+6): canonicalize + materialize (nodes partitioned by type —
-    # type filters become partition pruning, reference B-tree on node_type;
-    # edges cluster-by-sort instead: the dynamic-partition write tripled
-    # stage cost on the 7M-row table)
-    nodes_df = L.build_paper_nodes(meta).unionByName(L.build_entity_nodes(mentions_v))
-    edges_df = L.build_edges(meta, mentions_v, triples_v, resolve_titles=(mode != "fixture"))
-
-    if minimal and cross_link:
-        # write-through-cache commit (round-3 verdict #8): nodes/cross_edges
-        # were the laggard stages in the N-vs-4N table because their wall
-        # time is dominated by snapshot commits through ONE shared disk — a
-        # flat term parallelism can't shrink. Persist nodes/edges LAZILY
-        # and run all THREE stage-6 jobs concurrently: the writes populate
-        # the cache as a side effect (the block manager's per-block lock
-        # dedupes concurrent computation), and the cross-link blocking
-        # self-join (compute-heavy, scales with cores) overlaps the two
-        # commit-bound parquet writes instead of waiting for them. An
-        # eager materialization pass first would serialize the full
-        # compute BEFORE any write — measured +70% pipeline wall time.
-        # cross_link consumes the CACHED logical tables —
-        # content-identical to the committed read-back (deterministic
-        # ids), pinned by the pipeline E2E tests.
-        nodes_df = nodes_df.persist(StorageLevel.MEMORY_AND_DISK)
-        edges_df = edges_df.persist(StorageLevel.MEMORY_AND_DISK)
-        _cached.extend([nodes_df, edges_df])
-        try:
-            with ThreadPoolExecutor(max_workers=3) as ex:
-                futs = {
-                    "nodes": ex.submit(
-                        _timed, "nodes", io.write_stage,
-                        nodes_df, "nodes", fp, ["node_type"],
-                    ),
-                    "edges": ex.submit(
-                        _timed, "edges", io.write_stage,
-                        edges_df, "edges", fp, None, ["edge_type"],
-                    ),
-                    "cross_edges": ex.submit(
-                        _timed, "cross_edges", io.write_stage,
-                        L.cross_link(nodes_df, edges_df, max_block_degree),
-                        "cross_edges", fp,
-                    ),
-                }
-                # gather ALL failures (a commit error must not mask the
-                # likelier compute error in the cross-link job) and raise
-                # the first with the rest attached
-                results, errs = {}, []
-                for name, f in futs.items():
-                    try:
-                        results[name] = f.result()
-                    except Exception as exc:  # noqa: BLE001 — re-raised below
-                        errs.append((name, exc))
-                if errs:
-                    first = errs[0][1]
-                    for name, exc in errs[1:]:
-                        first.add_note(f"also failed: stage {name}: {exc!r}")
-                    raise first
-            nodes, edges = results["nodes"], results["edges"]
-            edges_all = _timed(
-                "edges_all", io.commit_union, "edges_all", ["edges", "cross_edges"], fp
-            )
-            io.flush_metrics()
-        finally:
-            # a failure must not leave two full-table persists pinned in a
-            # long-lived session (streaming/incremental services reuse one)
-            for df in _cached:
-                df.unpersist()
-        return PipelineResult(
-            nodes=nodes, edges=edges_all, metrics=io.metrics(), lineage=io.lineage()
-        )
-
+    timed = _make_timed(timings)
+    cached: list[DataFrame] = []
     try:
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            f_nodes = ex.submit(
-                _timed, "nodes", io.write_stage, nodes_df, "nodes", fp, ["node_type"],
-            )
-            f_edges = ex.submit(
-                _timed, "edges", io.write_stage, edges_df, "edges", fp, None, ["edge_type"],
-            )
-            nodes, edges = f_nodes.result(), f_edges.result()
-
-        # stage 6: cross-document linking. The final edge table is a zero-copy
-        # union commit (Iceberg-append semantics): rewriting all intra-doc edges
-        # just to co-locate the cross edges would be the pipeline's largest IO
-        # cost at scale, for no query benefit. Full mode keeps the committed
-        # read-back as cross_link's input — the resume contract (a restart
-        # recomputes nothing before the last snapshot).
-        if cross_link:
-            _timed(
+        nodes_df, edges_df = _build_batch(
+            io, fp, pages, mode, timed, cached,
+            full=not minimal, canonicalize=canonicalize,
+        )
+        # write-through-cache commit (round-3 verdict #8): in minimal mode
+        # nodes/cross_edges were the laggard stages in the N-vs-4N table
+        # because their wall time is dominated by snapshot commits through
+        # ONE shared disk — a flat term parallelism can't shrink. Persist
+        # nodes/edges LAZILY and run all THREE stage-6 jobs concurrently:
+        # the writes populate the cache as a side effect, and the cross-link
+        # blocking self-join (compute-heavy, scales with cores) overlaps the
+        # two commit-bound parquet writes instead of waiting for them.
+        # cross_link consumes the CACHED logical tables — content-identical
+        # to the committed read-back (deterministic ids), pinned by the
+        # pipeline E2E tests.
+        overlap = minimal and cross_link
+        if overlap:
+            nodes_df, edges_df = _persist(nodes_df, cached), _persist(edges_df, cached)
+        # nodes partitioned by type — type filters become partition pruning,
+        # reference B-tree on node_type; edges cluster-by-sort instead: the
+        # dynamic-partition write tripled stage cost on the 7M-row table
+        commits = {
+            "nodes": lambda: timed(
+                "nodes", io.write_stage, nodes_df, "nodes", fp, ["node_type"]
+            ),
+            "edges": lambda: timed(
+                "edges", io.write_stage, edges_df, "edges", fp, None, ["edge_type"]
+            ),
+        }
+        if overlap:
+            # planned inside its thread, so plan analysis overlaps the
+            # nodes/edges writes instead of delaying their start
+            commits["cross_edges"] = lambda: timed(
                 "cross_edges", io.write_stage,
-                L.cross_link(nodes, edges, max_block_degree), "cross_edges", fp,
+                L.cross_link(nodes_df, edges_df, max_block_degree),
+                "cross_edges", fp,
             )
-            edges_all = _timed(
-                "edges_all", io.commit_union, "edges_all", ["edges", "cross_edges"], fp
+        out = _commit_concurrently(commits)
+        if cross_link and not overlap:
+            # full mode keeps the committed read-back as cross_link's input —
+            # the resume contract (a restart recomputes nothing before the
+            # last snapshot)
+            timed(
+                "cross_edges", io.write_stage,
+                L.cross_link(out["nodes"], out["edges"], max_block_degree),
+                "cross_edges", fp,
             )
-        else:
-            edges_all = _timed("edges_all", io.commit_union, "edges_all", ["edges"], fp)
-
+        # stage 7: the final edge table is a zero-copy union commit
+        # (Iceberg-append semantics): rewriting all intra-doc edges just to
+        # co-locate the cross edges would be the pipeline's largest IO cost
+        # at scale, for no query benefit
+        members = ["edges", "cross_edges"] if cross_link else ["edges"]
+        edges_all = timed("edges_all", io.commit_union, "edges_all", members, fp)
         io.flush_metrics()
     finally:
-        # same rule as the minimal+cross_link branch: a failed stage write
-        # must not leave full-table persists pinned in a reused session
-        for df in _cached:
+        for df in cached:
             df.unpersist()
     return PipelineResult(
-        nodes=nodes, edges=edges_all, metrics=io.metrics(), lineage=io.lineage()
+        nodes=out["nodes"], edges=edges_all, metrics=io.metrics(), lineage=io.lineage()
     )
 
 
@@ -345,7 +348,6 @@ def run_pipeline_incremental(
     mode: str = "heuristic",
     cross_link: bool = True,
     max_block_degree: int | None = 1000,
-    compact_above: int | None = 8,
     timings: dict | None = None,
 ) -> PipelineResult:
     """Ingest ONE batch of new pages into an existing graph — the engine's
@@ -369,9 +371,8 @@ def run_pipeline_incremental(
       skip the ones that already landed (an edges-only guard would lose the
       batch's cross_edges delta and leave edges_all stale after a crash
       between the two);
-    - every ``compact_above`` delta snapshots, the node/edge tables are
-      compacted to one file set (``TableIO.compact``) — N batches otherwise
-      mean N-way union reads forever.
+    - a table holding more than ``COMPACT_ABOVE`` delta snapshots is
+      compacted to one file set (``TableIO.compact``) at batch start.
 
     Structural output (node/edge ids, types, labels) equals a one-shot
     ingest of the concatenated corpus; descriptive PROPERTIES follow
@@ -381,7 +382,7 @@ def run_pipeline_incremental(
     io = TableIO(spark, workdir)
     fp = f"batch:{batch_id}:{mode}"
 
-    _timed = _make_timed(timings)
+    timed = _make_timed(timings)
 
     if io.is_committed(f"batch_complete@{fp}", fp):
         # whole batch already ingested (marker is committed LAST — after
@@ -392,74 +393,67 @@ def run_pipeline_incremental(
             metrics=io.metrics(), lineage=io.lineage(),
         )
 
-    docs = (
-        H.extract_text(new_pages)
-        .select("url", "warc_ts", F.col("extracted_text").alias("text"), "lang")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    meta = X.extract_metadata(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    cached = [docs, meta]
+    cached: list[DataFrame] = []
     try:
-        if mode == "fixture":
-            mentions = X.extract_mentions_fixture(docs)
-            triples = X.extract_triples_fixture(docs.join(meta.select("url", "title"), "url"))
-        else:
-            mentions = X.extract_mentions_heuristic(docs)
-            triples = X.extract_triples_heuristic(docs)
-        # lazily persisted, first-touch populated by the nodes/edges commits
-        # (the _stage rule: an eager count here would serialize the full
-        # extraction pass BEFORE any commit job starts — the exact
-        # measured-regression shape the batch path removed in round 5)
-        mentions_v = V.validate_mentions(mentions).persist(StorageLevel.MEMORY_AND_DISK)
-        cached.append(mentions_v)
-        triples_v = V.validate_triples(triples)
-
+        # stages 1-3 only persist lazily here, so they have no boundary of
+        # their own to time: a batch's timings are its commits
+        batch_nodes, batch_edges = _build_batch(
+            io, fp, new_pages, mode, _make_timed(None), cached
+        )
         # batch nodes/edges each feed two jobs (their own delta commit + the
         # cross-link postings) — persisted so build_edges' three shuffles and
-        # the node aggregate run once, not per consumer (guide §5: reused AND
+        # the node aggregate run once, not per consumer (reused AND
         # expensive to recompute)
-        batch_nodes = (
-            L.build_paper_nodes(meta)
-            .unionByName(L.build_entity_nodes(mentions_v))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        batch_edges = L.build_edges(
-            meta, mentions_v, triples_v, resolve_titles=(mode != "fixture")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        cached.extend([batch_nodes, batch_edges])
+        batch_nodes = _persist(batch_nodes, cached)
+        batch_edges = _persist(batch_edges, cached)
 
-        # snapshot maintenance moved to the batch START (was: auto-compact
-        # inside append_rows): the cross-link job below overlaps the
-        # node/edge appends and reads the PRIOR snapshots lazily, and a
-        # concurrent auto-compaction's expiry sweep could delete those dirs
-        # mid-read. Compacting up front — serially, before any batch job —
-        # keeps the same bounded snapshot counts with no mid-batch sweep.
-        if compact_above is not None:
-            for t in ("nodes", "edges", "cross_edges", "postings"):
-                if io.snapshot_count(t) > compact_above:
-                    io.compact(t, fp)
+        # snapshot maintenance at the batch START: the cross-link job below
+        # overlaps the node/edge appends and reads the PRIOR snapshots
+        # lazily, and a concurrent compaction's expiry sweep could delete
+        # those dirs mid-read. Compacting up front — serially, before any
+        # batch job — keeps the snapshot counts bounded with no mid-batch
+        # sweep.
+        for t in ("nodes", "edges", "cross_edges", "postings"):
+            if io.snapshot_count(t) > COMPACT_ABOVE:
+                io.compact(t, fp)
 
-        # Corpus postings for the cross-link are maintained INCREMENTALLY as
-        # their own narrow append-only table ((paper_id, entity_id) binary):
-        # every new posting comes from an edge built by some batch, and every
-        # batch edge's target node is materialized by the SAME batch, so the
-        # batch delta is exactly _postings(batch_nodes, batch_edges). This
-        # replaces the per-batch full edges × ent_nodes join + distinct
-        # (O(corpus) shuffle per micro-batch) with a narrow table scan, and
-        # it breaks the cross job's dependency on the post-append tables, so
-        # all three delta commits overlap (the batch path's stage-6 shape).
-        # Older graph dirs without the table are backfilled on first touch.
-        pe_new = postings_all = postings_delta = None
+        # assume_unique_key on the edges/cross-edges/postings commits — those
+        # frames are unique by key BY CONSTRUCTION REGARDLESS of the input
+        # batch (build_edges ends in a (from,to,type) groupBy, cross edges and
+        # postings in a DISTINCT set), so the intra-batch first-wins aggregate
+        # would only re-shuffle the wide payload (measured as the dominant
+        # per-batch commit cost). The NODES commit keeps the default dedup:
+        # paper nodes are one row per input ROW, and a batch may legitimately
+        # carry the same url twice (a re-crawl landing in two files drained by
+        # one micro-batch) — entity nodes are hash-aggregated, but the paper
+        # side needs the first-wins collapse.
+        commits = {
+            "nodes": lambda: timed(
+                "nodes_delta", io.append_rows, batch_nodes, "nodes", ["id"], fp
+            ),
+            "edges": lambda: timed(
+                "edges_delta", io.append_rows, batch_edges, "edges", ["id"], fp,
+                assume_unique_key=True,
+            ),
+        }
         if cross_link:
+            # Corpus postings for the cross-link are maintained INCREMENTALLY
+            # as their own narrow append-only table ((paper_id, entity_id)
+            # binary): every new posting comes from an edge built by some
+            # batch, and every batch edge's target node is materialized by
+            # the SAME batch, so the batch delta is exactly
+            # _postings(batch_nodes, batch_edges). This replaces a per-batch
+            # full edges × ent_nodes join + distinct (O(corpus) shuffle per
+            # micro-batch) with a narrow table scan, and it breaks the cross
+            # job's dependency on the post-append tables, so the delta
+            # commits overlap (the batch path's stage-6 shape). Older graph
+            # dirs without the table are backfilled on first touch.
+            #
             # persisted: pe_new feeds THREE jobs (the postings delta append,
             # the postings_all union, and the enumeration's batch side) that
             # run concurrently in the commit threads below — unpersisted,
-            # each re-runs the batch-edges × entity-nodes semi-join (guide
-            # §5: reused AND joins/shuffles to recompute)
-            pe_new = L._postings(batch_nodes, batch_edges).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            cached.append(pe_new)
+            # each re-runs the batch-edges × entity-nodes semi-join
+            pe_new = _persist(L._postings(batch_nodes, batch_edges), cached)
             postings_delta = pe_new  # the normal per-batch append: O(batch)
             try:
                 pe_prior = io.read("postings")
@@ -478,90 +472,37 @@ def run_pipeline_incremental(
                 if pe_prior is None
                 else pe_prior.unionByName(pe_new).distinct()
             )
-
-        # assume_unique_key on the edges/cross-edges/postings commits — those
-        # frames are unique by key BY CONSTRUCTION REGARDLESS of the input
-        # batch (build_edges ends in a (from,to,type) groupBy, cross edges and
-        # postings in a DISTINCT set), so the intra-batch first-wins aggregate
-        # would only re-shuffle the wide payload (measured as the dominant
-        # per-batch commit cost). The NODES commit keeps the default dedup:
-        # paper nodes are one row per input ROW, and a batch may legitimately
-        # carry the same url twice (a re-crawl landing in two files drained by
-        # one micro-batch) — entity nodes are hash-aggregated, but the paper
-        # side needs the first-wins collapse.
-        def _commit_edges(nodes_future):
-            eb = _timed(
-                "edges_delta", io.append_rows, batch_edges, "edges", ["id"],
-                fp, None, assume_unique_key=True,
+            # the postings table is a derived cache of _postings(nodes,
+            # edges), so its append waits for BOTH source appends: a batch
+            # whose nodes append failed while edges + postings landed would
+            # leave rows the from-tables recompute cannot produce, and only
+            # a re-run of the SAME batch id heals that (an abandoned batch
+            # id would leave the append-only table inconsistent forever)
+            commits["postings"] = lambda: timed(
+                "postings_delta", io.append_rows, postings_delta, "postings",
+                ["paper_id", "entity_id"], fp, assume_unique_key=True,
             )
-            if cross_link:
-                # chained AFTER the edges append AND the nodes commit: the
-                # postings table is a derived cache of _postings(nodes,
-                # edges), so it must never get ahead of EITHER source — a
-                # batch whose nodes append failed while edges + postings
-                # landed would otherwise leave rows the from-tables
-                # recompute cannot produce, and only a re-run of the SAME
-                # batch id heals that (an abandoned batch id would leave
-                # the append-only table inconsistent forever). Waiting on
-                # the concurrently-running nodes future costs only the
-                # commit-latency difference; the postings delta itself is
-                # narrow.
-                nodes_future.result()
-                _timed(
-                    "postings_delta", io.append_rows, postings_delta, "postings",
-                    ["paper_id", "entity_id"], fp, None, assume_unique_key=True,
-                )
-            return eb
-
-        def _commit_cross():
-            # the candidate enumeration reads ONLY the prior-snapshot postings
-            # (manifest pinned at the read() above) + the cached batch frames,
-            # so it runs concurrently with the node/edge appends
-            delta = L.cross_link_incremental(
-                None, None, batch_edges, max_block_degree,
-                postings=postings_all, new_postings=pe_new,
+            # the candidate enumeration reads ONLY the prior-snapshot
+            # postings (manifest pinned at the read() above) + the cached
+            # batch frames, so it runs concurrently with the node/edge
+            # appends
+            commits["cross"] = lambda: timed(
+                "cross_delta", io.append_rows,
+                L.cross_link_incremental(
+                    None, None, batch_edges, max_block_degree,
+                    postings=postings_all, new_postings=pe_new,
+                ),
+                "cross_edges", ["id"], fp, assume_unique_key=True,
             )
-            return _timed(
-                "cross_delta", io.append_rows, delta, "cross_edges", ["id"],
-                fp, None, assume_unique_key=True,
-            )
+        nodes_all = _commit_concurrently(
+            commits, after={"postings": ("nodes", "edges")}
+        )["nodes"]
 
-        with ThreadPoolExecutor(max_workers=3) as ex:
-            f_nodes = ex.submit(
-                _timed, "nodes_delta", io.append_rows, batch_nodes,
-                "nodes", ["id"], fp, None,
-            )
-            futs = {
-                "nodes": f_nodes,
-                "edges": ex.submit(_commit_edges, f_nodes),
-            }
-            if cross_link:
-                futs["cross"] = ex.submit(_commit_cross)
-            # gather ALL failures (same rule as the batch path: a commit
-            # error must not mask the likelier compute error in the
-            # cross-link job) and raise the first with the rest attached
-            results, errs = {}, []
-            for name, f in futs.items():
-                try:
-                    results[name] = f.result()
-                except Exception as exc:  # noqa: BLE001 — re-raised below
-                    errs.append((name, exc))
-            if errs:
-                first = errs[0][1]
-                for name, exc in errs[1:]:
-                    first.add_note(f"also failed: stage {name}: {exc!r}")
-                raise first
-        nodes_all = results["nodes"]
+        members = ["edges", "cross_edges"] if cross_link else ["edges"]
+        edges_all = timed("edges_all_union", io.commit_union, "edges_all", members, fp)
 
-        if cross_link:
-            edges_all = _timed("edges_all_union", io.commit_union, "edges_all", ["edges", "cross_edges"], fp)
-        else:
-            edges_all = _timed("edges_all_union", io.commit_union, "edges_all", ["edges"], fp)
-
-        _timed("metrics_mark", lambda: (io.flush_metrics(), io.mark(f"batch_complete@{fp}", fp)))
+        timed("metrics_mark", lambda: (io.flush_metrics(), io.mark(f"batch_complete@{fp}", fp)))
     finally:
-        # a failed/retried batch must not pin three more cached tables per
-        # attempt in a long-lived streaming session (the minimal-mode rule)
         for df in cached:
             df.unpersist()
     return PipelineResult(

@@ -12,8 +12,11 @@ callers:
 - a stage keyed by (name, fingerprint) that is already committed is
   **skipped on re-run** and its snapshot is read back (idempotent resume;
   deterministic ids make output content-stable across runs);
-- ``upsert`` = MERGE-by-key emulation: new rows win over existing on key
-  collision, everything else is unioned.
+- ``append_rows`` = first-wins MERGE emulation for incremental ingest:
+  only the rows whose key is not yet in the table are written, as a new
+  delta snapshot added to the table's member list (existing rows win on
+  key collision); ``compact`` rewrites the member list into one snapshot,
+  and the incremental pipeline runs it at batch start.
 
 Lineage + metrics: every commit appends a lineage row and per-partition row
 counts to sidecar tables (``_lineage``, ``_metrics``), per the north rule.
@@ -32,15 +35,13 @@ from pyspark.sql import functions as F
 
 
 class TableIO:
-    def __init__(self, spark: SparkSession, root: str, defer_metrics: bool = True):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)
         self._manifest_path = os.path.join(root, "_manifest.json")
-        # deferred mode batches all stages' metrics into ONE Spark job at
-        # flush() instead of one job per stage (10 stages = 10 job launches
-        # of pure overhead otherwise)
-        self.defer_metrics = defer_metrics
+        # every commit's metrics are deferred to flush_metrics(), which
+        # records all of them at once from the snapshots' parquet footers
         self._pending: list[tuple[str, str, str, float]] = []  # (name, fp, path, sec)
         # stage writes may be submitted from concurrent driver threads
         # (independent stages overlap); manifest read-modify-write is locked
@@ -50,9 +51,8 @@ class TableIO:
         # prior append, so appends to the SAME table serialize on a per-table
         # lock (different tables still overlap). compact() takes the same
         # lock (its expiry sweep must not race a concurrent append's
-        # yet-unrecorded snapshot); RLock because append_rows auto-compacts
-        # while already holding it.
-        self._table_locks: dict[str, threading.RLock] = {}
+        # yet-unrecorded snapshot).
+        self._table_locks: dict[str, threading.Lock] = {}
         # snapshot dirs written but not yet recorded in the manifest —
         # write_stage doesn't take the table lock (stage names are unique),
         # so compact's sweep must see these to never delete a mid-commit dir
@@ -64,9 +64,9 @@ class TableIO:
         # unpin a path the metrics job still holds)
         self._reading: set[str] = set()
 
-    def _table_lock(self, name: str) -> threading.RLock:
+    def _table_lock(self, name: str) -> threading.Lock:
         with self._lock:
-            return self._table_locks.setdefault(name, threading.RLock())
+            return self._table_locks.setdefault(name, threading.Lock())
 
     # -- manifest ----------------------------------------------------------
     def _load_manifest(self) -> dict:
@@ -179,13 +179,8 @@ class TableIO:
             writer.parquet(snap)
 
             committed = self.spark.read.parquet(snap)
-            if self.defer_metrics:
-                with self._lock:
-                    self._pending.append((name, fingerprint, snap, time.time() - t0))
-            else:
-                self._append_metrics(name, fingerprint, committed, time.time() - t0)
-
             with self._lock:
+                self._pending.append((name, fingerprint, snap, time.time() - t0))
                 manifest = self._load_manifest()
                 superseded = name in manifest["tables"]
                 manifest["tables"][name] = {
@@ -240,27 +235,6 @@ class TableIO:
             return df
         return self.spark.read.parquet(t["path"])
 
-    def upsert(self, df: DataFrame, name: str, key: list[str], fingerprint: str) -> DataFrame:
-        """MERGE-emulation: new rows replace existing rows with the same key.
-        Read-modify-write, so concurrent upserts to the same table SERIALIZE
-        on the per-table lock (two unlocked upserts would each anti-join only
-        against its own df and the second commit silently drop the first's
-        rows); intra-batch duplicate keys collapse deterministically via the
-        same first-wins rule as :meth:`append_rows`."""
-        with self._table_lock(name):
-            if self.is_committed(name, fingerprint):
-                return self.read(name)
-            df = self._dedup_first(df, key)
-            manifest = self._load_manifest()
-            if name in manifest["tables"]:
-                existing = self.read(name)
-                merged = df.unionByName(
-                    existing.join(df.select(key), key, "left_anti")
-                )
-            else:
-                merged = df
-            return self.write_stage(merged, name, fingerprint)
-
     @staticmethod
     def _dedup_first(df: DataFrame, key: list[str]) -> DataFrame:
         """Deterministic intra-batch first-wins: among rows sharing a key,
@@ -297,7 +271,6 @@ class TableIO:
         name: str,
         key: list[str],
         fingerprint: str,
-        compact_above: int | None = None,
         assume_unique_key: bool = False,
     ) -> DataFrame:
         """First-wins incremental MERGE, append-only: write ONLY the delta
@@ -312,11 +285,6 @@ class TableIO:
         anti-join and the member-path list must both see every prior append,
         or a concurrent append's path is silently dropped and its keys can
         duplicate. Different tables still append concurrently.
-
-        ``compact_above``: auto-maintenance — when the member-path list
-        exceeds this many snapshots after the append, the table is compacted
-        to one snapshot (N batches otherwise = N delta files = read
-        amplification at every later read).
 
         ``assume_unique_key``: the caller asserts ``df`` is already unique
         by ``key`` (e.g. the output of a deterministic hash-aggregate on the
@@ -368,8 +336,6 @@ class TableIO:
                 self._prune_markers(manifest)
                 self._commit_manifest(manifest)
                 self._pending.append((name, fingerprint, snap, time.time() - t0))
-            if compact_above is not None and len(prior_paths) + 1 > compact_above:
-                return self.compact(name, fingerprint)
             return self.read(name)
 
     def snapshot_count(self, name: str) -> int:
@@ -405,8 +371,8 @@ class TableIO:
 
         Superseded snapshot directories are DELETED after the manifest
         commit (the expire-snapshots half of the maintenance op) — without
-        it, auto-compaction in a long-running ingest accumulates a full
-        extra copy of the table every ``compact_above`` batches. Like
+        it, periodic compaction in a long-running ingest accumulates a full
+        extra copy of the table at every compaction. Like
         Iceberg's expire, this invalidates DataFrames handed out from
         *earlier* reads of the pre-compaction snapshot list; re-read after
         compacting. Paths referenced by OTHER manifest entries (e.g. an
@@ -562,20 +528,6 @@ class TableIO:
         ldir = os.path.join(self.root, "_lineage")
         os.makedirs(ldir, exist_ok=True)
         pq.write_table(table, os.path.join(ldir, f"part-{uuid.uuid4().hex}.parquet"))
-
-    def _append_metrics(
-        self, name: str, fingerprint: str, committed: DataFrame, elapsed: float
-    ) -> None:
-        per_part = (
-            committed.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .withColumn("stage", F.lit(name))
-            .withColumn("fingerprint", F.lit(fingerprint))
-        )
-        mpath = os.path.join(self.root, "_metrics")
-        per_part.write.mode("append").parquet(mpath)
-
-        self._write_lineage_rows([(name, fingerprint, float(elapsed))])
 
     def metrics(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.root, "_metrics"))

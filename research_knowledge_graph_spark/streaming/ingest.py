@@ -38,12 +38,12 @@ def _ensure_local_dir(path: str) -> None:
     at start — exactly what the guard exists to prevent. Remote stores
     either auto-create on write or are provisioned out of band."""
     if path.startswith("file://"):
-        # file://host/path is not supported for local mkdir; the common
-        # forms are file:///abs/path (empty authority) and file:/abs/path
-        local = path[len("file://"):]
-        if local and not local.startswith("/"):
-            return  # non-empty authority (file://host/..) — not ours
-        os.makedirs(local or "/", exist_ok=True)
+        # the empty authority (file:///abs/path) and "localhost"
+        # (file://localhost/abs/path) both name this host (RFC 8089, and
+        # Hadoop's local filesystem); any other host is not ours
+        host, _, rest = path[len("file://"):].partition("/")
+        if host in ("", "localhost"):
+            os.makedirs("/" + rest, exist_ok=True)
     elif path.startswith("file:"):
         os.makedirs(path[len("file:"):], exist_ok=True)
     elif "://" not in path:

@@ -174,7 +174,8 @@ def test_append_rows_concurrent_same_table(spark, tmp_path):
 
 
 def test_append_rows_auto_compaction(spark, tmp_path):
-    """Verdict round-2 #7: the snapshot-count threshold keeps the
+    """Verdict round-2 #7: compacting whenever the snapshot count passes a
+    threshold (the incremental pipeline's batch-start maintenance) keeps the
     member-path list bounded across many batches; content identical to the
     union of all appends."""
     import json
@@ -183,8 +184,10 @@ def test_append_rows_auto_compaction(spark, tmp_path):
 
     io = TableIO(spark, str(tmp_path / "ac"))
     for i in range(20):
+        if io.snapshot_count("t") > 4:
+            io.compact("t", f"b{i}")
         df = spark.createDataFrame([(i, i * 10)], "id int, val int")
-        io.append_rows(df, "t", ["id"], f"b{i}", compact_above=5)
+        io.append_rows(df, "t", ["id"], f"b{i}")
 
     with open(str(tmp_path / "ac") + "/_manifest.json") as f:
         n_paths = len(json.load(f)["tables"]["t"]["paths"])
@@ -234,7 +237,7 @@ def test_compact_spares_inflight_and_serializes_with_appends(spark, tmp_path):
     snapshot a concurrent writer has put on disk but not yet recorded in the
     manifest. (a) an in-flight write_stage dir is pinned by the in-flight
     set; (b) direct compact() calls racing append_rows on the same table
-    serialize on the (reentrant) table lock — no append is lost."""
+    serialize on the per-table lock — no append is lost."""
     import os
     from concurrent.futures import ThreadPoolExecutor
 

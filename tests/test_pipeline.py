@@ -4,7 +4,9 @@
 from __future__ import annotations
 
 import os
+import threading
 
+import pytest
 from pyspark.sql import functions as F
 
 from research_knowledge_graph_spark.operators.extraction import (
@@ -20,7 +22,10 @@ from research_knowledge_graph_spark.operators.validation import (
     validate_mentions,
     validate_triples,
 )
-from research_knowledge_graph_spark.plans.pipeline import run_pipeline
+from research_knowledge_graph_spark.plans.pipeline import (
+    _commit_concurrently,
+    run_pipeline,
+)
 from research_knowledge_graph_spark.sources.pages import synthesize_pages
 
 
@@ -177,3 +182,61 @@ def test_cross_link_cached_matches_committed_readback(spark, tmp_path):
         ).collect()
     )
     assert committed == recomputed
+
+
+def test_pipeline_full_mode_reports_every_failed_commit(spark, tmp_path, monkeypatch):
+    """Full mode commits nodes and edges from overlapped driver threads;
+    when both commits fail, the raised error carries the second failure as
+    a note instead of losing it."""
+    from research_knowledge_graph_spark.sources.table_io import TableIO
+
+    write_stage = TableIO.write_stage
+
+    def failing(self, df, name, *a, **kw):
+        if name in ("nodes", "edges"):
+            raise RuntimeError(f"simulated {name} commit failure")
+        return write_stage(self, df, name, *a, **kw)
+
+    monkeypatch.setattr(TableIO, "write_stage", failing)
+    with pytest.raises(RuntimeError, match="simulated nodes") as info:
+        run_pipeline(
+            spark, synthesize_pages(spark, 20), str(tmp_path / "kg"), mode="heuristic"
+        )
+    notes = getattr(info.value, "__notes__", [])
+    assert any("also failed: stage edges" in n for n in notes), notes
+
+
+def test_commit_concurrently_orders_and_skips_dependents():
+    """A job listed in ``after`` starts only once its prerequisites have
+    finished, and is skipped, not reported, when one of them failed."""
+    release = threading.Event()
+    seen = []
+
+    def slow():
+        assert release.wait(timeout=30)
+        seen.append("slow")
+        return 1
+
+    def dependent():
+        seen.append("dependent")
+        return 2
+
+    def go():
+        release.set()
+        return 3
+
+    out = _commit_concurrently(
+        {"slow": slow, "dependent": dependent, "go": go}, {"dependent": ("slow",)}
+    )
+    assert out == {"slow": 1, "dependent": 2, "go": 3}
+    assert seen == ["slow", "dependent"]
+
+    def boom():
+        raise ValueError("prerequisite failed")
+
+    with pytest.raises(ValueError, match="prerequisite failed") as info:
+        _commit_concurrently(
+            {"boom": boom, "dependent": dependent}, {"dependent": ("boom",)}
+        )
+    assert seen == ["slow", "dependent"]  # the dependent never ran
+    assert not getattr(info.value, "__notes__", [])

@@ -6,11 +6,15 @@ the drained stream is a no-op."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from research_knowledge_graph_spark.plans.pipeline import run_pipeline
 from research_knowledge_graph_spark.sources.pages import synthesize_pages
 from research_knowledge_graph_spark.streaming.ingest import (
+    _ensure_local_dir,
     run_streaming_graph_ingest,
 )
 from research_knowledge_graph_spark.sources.table_io import TableIO
@@ -56,3 +60,23 @@ def test_streaming_graph_ingest_converges(spark, tmp_path):
     # drained stream re-run: no new batches, graph unchanged
     run_streaming_graph_ingest(spark, inp, graph, ckpt)
     assert _edge_struct(io.read("edges_all")) == got_edges
+
+
+@pytest.mark.parametrize(
+    "spelling", ["{p}", "file:{p}", "file://{p}", "file://localhost{p}"]
+)
+def test_ensure_local_dir_creates_every_local_spelling(tmp_path, spelling):
+    """Every spelling of a local landing dir gets created before the stream
+    starts, including the RFC 8089 ``file://localhost/...`` form."""
+    target = tmp_path / "landing"
+    _ensure_local_dir(spelling.format(p=target))
+    assert target.is_dir()
+
+
+@pytest.mark.parametrize(
+    "uri", ["s3a://bucket/landing", "file://otherhost/landing"]
+)
+def test_ensure_local_dir_leaves_remote_uris_alone(tmp_path, monkeypatch, uri):
+    monkeypatch.chdir(tmp_path)
+    _ensure_local_dir(uri)
+    assert os.listdir(tmp_path) == []

@@ -1,7 +1,6 @@
 """TableIO maintenance semantics added by the round-5 core-path review:
-upsert locking/dedup, schema-evolution-tolerant appends, manifest marker
-pruning, stage re-commit snapshot expiry, and checkpoint-scoped streaming
-batch identity."""
+schema-evolution-tolerant appends, manifest marker pruning, stage re-commit
+snapshot expiry, and checkpoint-scoped streaming batch identity."""
 
 from __future__ import annotations
 
@@ -13,23 +12,6 @@ from research_knowledge_graph_spark.sources.table_io import TableIO
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
-
-
-def test_upsert_intra_batch_dedup_and_merge(spark, tmp_path):
-    io = TableIO(spark, str(tmp_path / "t"))
-    base = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    io.upsert(base, "tbl", ["id"], "fp1")
-    # duplicate keys inside ONE upsert batch collapse deterministically
-    # (first-wins by orderable tuple — 'c' < 'z'), and new rows REPLACE
-    # existing rows on key collision while non-colliding rows survive
-    nxt = spark.createDataFrame(
-        [(2, "z"), (2, "c"), (3, "d")], "id long, v string"
-    )
-    out = io.upsert(nxt, "tbl", ["id"], "fp2")
-    assert _rows(out) == [(1, "a"), (2, "c"), (3, "d")]
-    # idempotent: same fingerprint re-run returns the committed table
-    again = io.upsert(nxt, "tbl", ["id"], "fp2")
-    assert _rows(again) == [(1, "a"), (2, "c"), (3, "d")]
 
 
 def test_append_rows_tolerates_snapshot_schema_evolution(spark, tmp_path):
